@@ -266,10 +266,10 @@ def _registry(window_first: bool = True) -> QueryRegistry:
     (the driver's view) fronts the current ``_DRIVER_WINDOW`` so the
     driver's 50-row-per-round correctness cap lands on the rotation's
     chosen lanes. Pass ``window_first=False`` for the stable MODULE
-    REGISTRATION order — measurement tools (perfsweep) need an order that
+    REGISTRATION order — the lane runner (tools/lanerun.py) needs an order that
     does NOT rotate with the window, because lane timings are
     neighborhood-sensitive and a baseline recorded under one window order
-    is incomparable under another (see tools/perfsweep.py)."""
+    is incomparable under another."""
     from big_data_analytics_machine_learning_poc_spark.operators import relational
 
     reg = QueryRegistry()

@@ -31,31 +31,26 @@ from pyspark.sql import DataFrame, SparkSession
 def release_local_checkpoint(df: DataFrame) -> bool:
     """Unpersist the storage blocks behind a frame returned by
     ``localCheckpoint()``. Returns True when blocks were released; False
-    (no-op) when the frame is not a direct checkpoint result. Async
+    (no-op) only when the alias-unwrapped analyzed plan is not a
+    ``LogicalRDD``, i.e. the frame is not a direct checkpoint result.
+    py4j errors propagate: a Spark plan-shape change must fail loudly,
+    not silently turn every release back into a leak. Async
     (non-blocking) — the executor frees blocks in the background."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        # unwrap .alias(...) wrappers — same data, same blocks
-        while plan.getClass().getSimpleName() == "SubqueryAlias":
-            plan = plan.child()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return False
-        plan.rdd().unpersist(False)
-        return True
-    except Exception:
+    plan = df._jdf.queryExecution().analyzed()
+    # unwrap .alias(...) wrappers — same data, same blocks
+    while plan.getClass().getSimpleName() == "SubqueryAlias":
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
         return False
+    plan.rdd().unpersist(False)
+    return True
 
 
 def unpersist_all(spark: SparkSession, blocking: bool = False) -> int:
     """Unpersist every persistent RDD in the SparkContext; returns how
     many were released. See module docstring for when this is safe."""
-    n = 0
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        it = jmap.values().iterator()
-        while it.hasNext():
-            it.next().unpersist(blocking)
-            n += 1
-    except Exception:
-        pass
-    return n
+    # py4j hands the java.util.Map over as a Python mapping of JavaRDDs
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    for rdd in rdds:
+        rdd.unpersist(blocking)
+    return len(rdds)

@@ -2,7 +2,7 @@
 
 Mirrors the driver's gate: run the Spark query and the oracle SQL over the
 same parquet, compare row count + column names + an order-insensitive value
-fingerprint. Used by tools/compare.py and the pytest suite so every operator
+fingerprint. Used by tools/lanerun.py and the pytest suite so every operator
 is differential-tested locally before the driver ever sees it.
 
 ORACLE-AUTHORING RULES (learned the hard way — see VERDICT r3 "What's
@@ -93,8 +93,16 @@ def compare_query(spark_df, con, sql: str, sidecar: str | None = None) -> list[s
     ``DIAG/compare_<name>.json`` next to the repo root, so a red row is
     diagnosable after the fact (round-2 ask: driver-side reds left nothing
     to inspect)."""
-    scols = spark_df.columns
-    srows = [tuple(r) for r in spark_df.collect()]
+    return compare_rows(
+        spark_df.columns, [tuple(r) for r in spark_df.collect()], con, sql, sidecar
+    )
+
+
+def compare_rows(
+    scols: list[str], srows: list[tuple], con, sql: str, sidecar: str | None = None
+) -> list[str]:
+    """``compare_query`` over rows the caller already collected (a lane
+    runner that also times and fingerprints the same collect)."""
     cur = con.execute(sql)
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()

@@ -10,10 +10,10 @@ change that silently adds a shuffle to a lane (a lost bucketing, a
 needless `repartition`, a join that stopped broadcasting) is a
 performance regression even when every correctness gate stays green.
 
-`tools/shufflebudget.py` sweeps the full registry and compares each
-lane's counts against the committed ledger `tools/shuffle_budget.json`;
-growth fails the sweep. tests/test_plans.py pins the counter itself and
-the headline lanes' budgets.
+`tools/gates.py budget` compares each registry lane's counts (from
+tools/lanerun.py records) against the committed ledger
+`tools/shuffle_budget.json`; growth fails the gate. tests/test_plans.py
+pins the counter itself and the headline lanes' budgets.
 
 Cost classes:
 
@@ -112,7 +112,7 @@ def table_scan_counts(
     stripped (executed subtrees render Final + Initial and would double-
     count). Occurrences within one segment = Catalyst re-planned a
     multi-consumer subtree per reference; across segments = sequential
-    one-time reads. tools/scanaudit.py sweeps the registry with this;
+    one-time reads. tools/lanerun.py records this for every lane;
     tests pin the r7 multi-consumer checkpoint fixes' shapes."""
     plans = [_drop_final_plan_sections(executed_plan(df))]
     plans += [_drop_final_plan_sections(executed_plan(sub)) for sub in subtrees]

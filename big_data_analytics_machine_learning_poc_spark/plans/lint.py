@@ -16,8 +16,8 @@ query's executed plan is scanned for:
 
 Known-justified exceptions are declared in ``ALLOWED`` next to their
 reason; anything else is a lint failure. tests/test_plans.py runs this
-over the cheap-to-construct modules; tools/planlint.py runs the full
-registry.
+over the cheap-to-construct modules; `tools/gates.py lint` checks the
+full registry from tools/lanerun.py records.
 """
 
 from __future__ import annotations

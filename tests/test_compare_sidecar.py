@@ -2,10 +2,11 @@
 
 The r2 motivation for the DIAG sidecar was that driver-side reds left
 nothing to inspect; r3's HUGEINT forensics only worked because sidecars
-existed. This test pins the property end-to-end: a FULL ``tools/compare.py``
-sweep (no query filter) over a registry containing a deliberately wrong
-oracle must (a) fail loudly and (b) leave ``DIAG/compare_<name>.json``
-carrying both fingerprints and the first differing rows.
+existed. This test pins the property end-to-end: a FULL ``tools/lanerun.py``
+pass (no lane filter) over a registry containing a deliberately wrong
+oracle must (a) fail the oracle gate loudly and (b) leave
+``DIAG/compare_<name>.json`` carrying both fingerprints and the first
+differing rows.
 """
 
 from __future__ import annotations
@@ -21,10 +22,22 @@ from .conftest import SF_DIR
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_full_sweep_writes_mismatch_sidecar(spark, monkeypatch):
+def _run_and_gate(monkeypatch, tmp_path) -> int:
+    """Full runner pass, then the oracle check's exit code. Runs at the
+    gate SF, whose sidecars carry no ``@sf`` suffix."""
+    from tools import gates, lanerun
+
+    records = tmp_path / "records.jsonl"
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), lanerun.GATE_SF)
+    monkeypatch.setattr(sys, "argv", ["lanerun.py", sf_dir, "--out", str(records)])
+    assert lanerun.main() == 0
+    monkeypatch.setattr(sys, "argv", ["gates.py", "oracle", str(records)])
+    return gates.main()
+
+
+def test_full_sweep_writes_mismatch_sidecar(spark, monkeypatch, tmp_path):
     import __spark_entry__ as entrymod
     import big_data_analytics_machine_learning_poc_spark.session as session_mod
-    from tools import compare
 
     name = "zz_forced_mismatch_probe"
     reg = QueryRegistry()
@@ -34,16 +47,15 @@ def test_full_sweep_writes_mismatch_sidecar(spark, monkeypatch):
     def probe(s, sf_dir):
         return s.range(1, 4).selectExpr("id AS v")
 
-    monkeypatch.setattr(entrymod, "_registry", lambda: reg)
+    monkeypatch.setattr(entrymod, "_registry", lambda window_first=True: reg)
     monkeypatch.setattr(session_mod, "get_session", lambda *a, **k: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)  # shared pytest session
-    monkeypatch.setattr(sys, "argv", ["compare.py", SF_DIR])  # FULL sweep
 
     sidecar = os.path.join(REPO, "DIAG", f"compare_{name}.json")
     if os.path.exists(sidecar):
         os.remove(sidecar)
     try:
-        rc = compare.main()
+        rc = _run_and_gate(monkeypatch, tmp_path)
         assert rc == 1, "a mismatching oracle must fail the sweep"
         assert os.path.exists(sidecar), "full sweep must dump the sidecar"
         payload = json.load(open(sidecar))
@@ -55,12 +67,11 @@ def test_full_sweep_writes_mismatch_sidecar(spark, monkeypatch):
             os.remove(sidecar)
 
 
-def test_full_sweep_green_lane_sidecar_has_agreeing_fingerprints(spark, monkeypatch):
+def test_full_sweep_green_lane_sidecar_has_agreeing_fingerprints(spark, monkeypatch, tmp_path):
     """The sidecar is written for GREEN lanes too (both fingerprints agree)
     — that is what made the r3 forensics possible without a re-run."""
     import __spark_entry__ as entrymod
     import big_data_analytics_machine_learning_poc_spark.session as session_mod
-    from tools import compare
 
     name = "zz_green_probe"
     reg = QueryRegistry()
@@ -69,16 +80,15 @@ def test_full_sweep_green_lane_sidecar_has_agreeing_fingerprints(spark, monkeypa
     def probe(s, sf_dir):
         return s.range(1, 4).selectExpr("id AS v")
 
-    monkeypatch.setattr(entrymod, "_registry", lambda: reg)
+    monkeypatch.setattr(entrymod, "_registry", lambda window_first=True: reg)
     monkeypatch.setattr(session_mod, "get_session", lambda *a, **k: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
-    monkeypatch.setattr(sys, "argv", ["compare.py", SF_DIR])
 
     sidecar = os.path.join(REPO, "DIAG", f"compare_{name}.json")
     if os.path.exists(sidecar):
         os.remove(sidecar)
     try:
-        rc = compare.main()
+        rc = _run_and_gate(monkeypatch, tmp_path)
         assert rc == 0
         payload = json.load(open(sidecar))
         assert payload["spark_fingerprint"] == payload["oracle_fingerprint"]

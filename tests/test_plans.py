@@ -292,7 +292,7 @@ def test_registry_plan_lint_cheap_modules(spark):
     """Mechanical anti-pattern lint over every query whose plan is cheap to
     construct (no stream/model execution at build time): no cartesian, no
     unjustified nested-loop join, no row-at-a-time Python UDF, no
-    unjustified global window. tools/planlint.py covers the full registry."""
+    unjustified global window. `tools/gates.py lint` covers the full registry."""
     from big_data_analytics_machine_learning_poc_spark.operators import (
         corpus,
         dedup,
@@ -408,7 +408,7 @@ def test_bucketed_join_eliminates_shuffle(spark):
 
 
 # --------------------------------------------------------------------------
-# Shuffle budget (plans/budget.py + tools/shufflebudget.py)
+# Shuffle budget (plans/budget.py + the budget gate in tools/gates.py)
 # --------------------------------------------------------------------------
 
 
@@ -462,7 +462,7 @@ def test_exchange_counts_invariant_to_execution(spark):
 def test_headline_lane_shuffle_budgets(spark):
     """Pin the headline lanes' shuffle budgets: a regression that adds an
     Exchange to these plans is a scale bug even while correctness stays
-    green. (Full-registry growth is gated by tools/shufflebudget.py
+    green. (Full-registry growth is gated by `tools/gates.py budget`
     against tools/shuffle_budget.json.)"""
     from big_data_analytics_machine_learning_poc_spark.plans.budget import exchange_counts
 
@@ -556,7 +556,7 @@ def test_r7_pinned_lanes_scan_shapes(spark):
     worst same-table plan-occurrence count (across the returned plan plus
     captured pre-barrier subtrees, AQE Final sections stripped) must not
     regress — a dropped pin re-inflates the count and fails here, not just
-    in the advisory tools/scanaudit.py sweep."""
+    in the advisory scans gate (tools/gates.py scans)."""
     import __spark_entry__ as entrymod
 
     from big_data_analytics_machine_learning_poc_spark.plans.barrier import capture_subtrees
@@ -580,7 +580,7 @@ def test_r7_pinned_lanes_scan_shapes(spark):
 
 def test_shuffle_budget_ledger_in_sync_with_registry():
     """Every registry lane appears in the committed ledger (regenerate via
-    tools/shufflebudget.py --baseline after adding lanes)."""
+    tools/gates.py budget --baseline after adding lanes)."""
     import json
     from pathlib import Path
 
@@ -591,51 +591,6 @@ def test_shuffle_budget_ledger_in_sync_with_registry():
     )["lanes"]
     missing = sorted(set(entrymod.queries()) - set(ledger))
     assert not missing, f"lanes missing from shuffle_budget.json: {missing}"
-
-
-def test_perfsweep_subset_write_baseline_merges(tmp_path, monkeypatch):
-    """perfsweep --write-baseline with a lane SUBSET must merge into the
-    existing baseline, not truncate it to the subset (the dropped-lanes
-    hazard class from ADVICE r5 #4)."""
-    import json
-    import sys
-
-    from tools import perfsweep
-
-    base = tmp_path / "perf_baseline.json"
-    base.write_text(
-        json.dumps(
-            {
-                "cpus": 4,
-                "runs": 3,
-                "sf_dir": "sfX",
-                "loadavg_start": [0.5],
-                "lanes": {
-                    "kept_lane": {"median_s": 1.0, "oneshot_s": 2.0, "rows": 1},
-                    "swept_lane": {"median_s": 9.0, "oneshot_s": 9.0, "rows": 1},
-                },
-            }
-        )
-    )
-    fake_report = {
-        "cpus": 4,
-        "runs": 3,
-        "sf_dir": "sfX",
-        "loadavg_start": [0.7],
-        "lanes": {"swept_lane": {"median_s": 1.5, "oneshot_s": 2.5, "rows": 1}},
-    }
-    monkeypatch.setattr(perfsweep, "sweep", lambda *a, **k: fake_report)
-    monkeypatch.setattr(
-        sys,
-        "argv",
-        ["perfsweep.py", "sfX", "swept_lane", "--write-baseline", str(base)],
-    )
-    assert perfsweep.main() == 0
-    merged = json.loads(base.read_text())
-    assert set(merged["lanes"]) == {"kept_lane", "swept_lane"}
-    assert merged["lanes"]["swept_lane"]["median_s"] == 1.5
-    assert merged["lanes"]["kept_lane"]["median_s"] == 1.0
-    assert merged["loadavg_start"] == [0.7]
 
 
 def test_benchfloor_gate_logic(monkeypatch, capsys):

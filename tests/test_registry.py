@@ -33,7 +33,7 @@ def test_every_lane_output_schema_is_driver_atomic(spark):
     CORRECTNESS_r06; the local comparator handles nested values, so only
     this sweep catches the class pre-freeze). Convention: surface arrays as
     `array_join(sort_array(...), ",")` — cf. `agg_collect_sorted`."""
-    from tools.schemaaudit import nonatomic_fields
+    from tools.lanerun import nonatomic_fields
 
     bad = {}
     for name, fn in entry.queries().items():
@@ -50,7 +50,7 @@ def test_nonatomic_detector_catches_the_r6_failure_shape(spark):
     import pyspark.sql.functions as F
     from pyspark.ml.linalg import Vectors
 
-    from tools.schemaaudit import nonatomic_fields
+    from tools.lanerun import nonatomic_fields
 
     df = spark.createDataFrame([([1, 2], {"a": 1}, (1, "x"))], ["arr", "mp", "st"])
     assert len(nonatomic_fields(df.schema)) == 3
